@@ -24,6 +24,7 @@ lists the registry with tags and deps (dbt ls).
 from __future__ import annotations
 
 import argparse
+import functools
 import sys
 from datetime import datetime, timezone
 
@@ -74,9 +75,14 @@ def cmd_build(args, spark: SparkSession) -> int:
     if args.write:
         import os
 
-        for name in sorted(built):
-            out = os.path.join(args.write, name)
-            ctx[name].write.mode("overwrite").parquet(out)
+        from .session import run_concurrently
+
+        outs = {name: os.path.join(args.write, name) for name in sorted(built)}
+        run_concurrently(spark, [
+            functools.partial(ctx[name].write.mode("overwrite").parquet, out)
+            for name, out in outs.items()
+        ])
+        for name, out in outs.items():
             print(f"wrote {name} -> {out}")
     if args.test:
         failures = _run_quality(ctx)

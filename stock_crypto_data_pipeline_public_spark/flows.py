@@ -17,10 +17,13 @@ for batch and streaming (the raw Parquet table is the meeting point).
 
 Every step is restart-safe: appends are keyed anti-joins (M2/M3), so
 re-running a flow over already-loaded landing files appends zero rows.
+Independent tables and quality checks run as concurrent Spark jobs, and a
+failed table does not stop the others.
 """
 
 from __future__ import annotations
 
+import functools
 import os
 from dataclasses import dataclass
 
@@ -32,6 +35,7 @@ from .operators.incremental import idempotent_append
 from .plans.market import registry as market_registry
 from .quality import run_market_quality_suite
 from .schemas import SCHEMAS
+from .session import run_concurrently
 from .sources import ingest
 from .streaming.pipeline import file_stream, run_incremental_sink
 
@@ -145,40 +149,46 @@ class BatchFlow:
         load run = one stamp, so replays produce the identical rows and the
         keyed anti-join makes re-ingestion a no-op *by construction* (the
         reference gets the same property from MERGE keys that include
-        LOAD_TIMESTAMP, a1_4:138-144)."""
-        appended: dict[str, int] = {}
-        for name, schema in SCHEMAS.items():
-            src_dir = os.path.join(self.landing_dir, name)
-            if not os.path.exists(src_dir):
-                continue
-            text = ingest.read_landing_csv(spark, src_dir, _string_schema(schema, LINEAGE))
-            # ON_ERROR='CONTINUE' semantics: a malformed line arrives as
-            # all-nulls + populated _corrupt_record — skip it, don't load a
-            # null row into the warehouse
-            if "_corrupt_record" in text.columns:
-                text = text.filter(F.col("_corrupt_record").isNull())
-            typed = ingest.try_cast_columns(text, _cast_map(schema, LINEAGE))
-            typed = typed.drop("_corrupt_record").withColumn(
-                "load_timestamp",
-                F.to_timestamp(
-                    F.regexp_extract(F.input_file_name(), r"_(\d{8}_\d{6})\.csv", 1),
-                    "yyyyMMdd_HHmmss",
-                ),
-            )
-            typed = ingest.align_columns(typed, schema)
-            # keyed anti-join only — NO high-water-mark pre-filter here: the
-            # stamp is filename-derived, not a monotonic server-side clock,
-            # so an out-of-order backfill landing file (older run suffix
-            # than the warehouse max) must still load. Replays stay no-ops
-            # via the anti-join alone; the HWM short-cut belongs to sources
-            # with monotonic stamps (vault_incremental over the warehouse).
-            appended[name] = idempotent_append(
-                spark,
-                typed,
-                os.path.join(self.warehouse_dir, name),
-                keys=RAW_KEYS[name],
-            )
-        return appended
+        LOAD_TIMESTAMP, a1_4:138-144).
+
+        Tables load as concurrent Spark jobs; a failed table does not stop
+        the others, and the first failure is raised once all have run."""
+        tables = [name for name in SCHEMAS if os.path.exists(os.path.join(self.landing_dir, name))]
+        counts = run_concurrently(
+            spark, [functools.partial(self._ingest_table, spark, name) for name in tables]
+        )
+        return dict(zip(tables, counts))
+
+    def _ingest_table(self, spark: SparkSession, name: str) -> int:
+        schema = SCHEMAS[name]
+        src_dir = os.path.join(self.landing_dir, name)
+        text = ingest.read_landing_csv(spark, src_dir, _string_schema(schema, LINEAGE))
+        # ON_ERROR='CONTINUE' semantics: a malformed line arrives as
+        # all-nulls + populated _corrupt_record — skip it, don't load a
+        # null row into the warehouse
+        if "_corrupt_record" in text.columns:
+            text = text.filter(F.col("_corrupt_record").isNull())
+        typed = ingest.try_cast_columns(text, _cast_map(schema, LINEAGE))
+        typed = typed.drop("_corrupt_record").withColumn(
+            "load_timestamp",
+            F.to_timestamp(
+                F.regexp_extract(F.input_file_name(), r"_(\d{8}_\d{6})\.csv", 1),
+                "yyyyMMdd_HHmmss",
+            ),
+        )
+        typed = ingest.align_columns(typed, schema)
+        # keyed anti-join only — NO high-water-mark pre-filter here: the
+        # stamp is filename-derived, not a monotonic server-side clock,
+        # so an out-of-order backfill landing file (older run suffix
+        # than the warehouse max) must still load. Replays stay no-ops
+        # via the anti-join alone; the HWM short-cut belongs to sources
+        # with monotonic stamps (vault_incremental over the warehouse).
+        return idempotent_append(
+            spark,
+            typed,
+            os.path.join(self.warehouse_dir, name),
+            keys=RAW_KEYS[name],
+        )
 
     def raw_tables(self, spark: SparkSession) -> dict[str, DataFrame]:
         return load_raw_tables(spark, self.warehouse_dir)

@@ -16,6 +16,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
+from .session import run_concurrently
+
 
 # -- generic checks (reference models/*/schema.yml) -------------------------
 def profile_table(df: DataFrame, hll_rsd: float = 0.05) -> DataFrame:
@@ -231,7 +233,8 @@ def check_price_data_freshness(prices: DataFrame, as_of, max_age_days: int = 7) 
 
 
 def run_market_quality_suite(ctx: dict[str, DataFrame], as_of=None) -> dict[str, int]:
-    """Run every applicable check against the built market DAG context."""
+    """Run every applicable check against the built market DAG context; the
+    checks count their violations as concurrent Spark jobs."""
     checks: dict[str, DataFrame] = {
         # generic
         "hub_customer_unique": unique(ctx["hub_customer"], ["customer_bk"]),
@@ -286,4 +289,5 @@ def run_market_quality_suite(ctx: dict[str, DataFrame], as_of=None) -> dict[str,
         checks["price_freshness"] = check_price_data_freshness(
             ctx["fct_asset_prices"], as_of, max_age_days=365
         )
-    return {name: df.count() for name, df in checks.items()}
+    counts = run_concurrently(ctx["hub_customer"].sparkSession, [df.count for df in checks.values()])
+    return dict(zip(checks, counts))

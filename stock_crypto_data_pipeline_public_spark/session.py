@@ -18,8 +18,14 @@ hold at both scales:
 from __future__ import annotations
 
 import os
+from collections.abc import Callable, Iterable
+from concurrent.futures import ThreadPoolExecutor
+from typing import TypeVar
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import SparkSession
+
+T = TypeVar("T")
 
 
 def get_spark(
@@ -78,3 +84,20 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def run_concurrently(spark: SparkSession, fns: Iterable[Callable[[], T]]) -> list[T]:
+    """Call the zero-argument functions concurrently, up to one thread each,
+    so independent Spark actions overlap on the cores; return the results
+    in input order.
+
+    Each target inherits the caller's local properties and tags (job group,
+    job description), wrapped one by one so no two threads share a
+    properties object. Every call finishes before this returns; the first
+    failure in input order is then re-raised."""
+    targets = [inheritable_thread_target(spark)(fn) for fn in fns]
+    if not targets:
+        return []
+    with ThreadPoolExecutor(max_workers=len(targets)) as pool:
+        futures = [pool.submit(target) for target in targets]
+    return [f.result() for f in futures]

@@ -24,6 +24,7 @@ appends zero rows.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 from dataclasses import dataclass
@@ -35,6 +36,7 @@ from pyspark.sql import functions as F
 from .operators.incremental import high_water_mark, idempotent_append
 from .plans.market import registry as market_registry
 from .flows import load_raw_tables
+from .session import run_concurrently
 
 #: materialized vault tables → their incremental append key columns
 VAULT_KEYS: dict[str, tuple[str, ...]] = {
@@ -127,30 +129,32 @@ class VaultMaterializer:
         buildable = set(market_registry.buildable(raw))
         targets = [m for m in VAULT_KEYS if m in buildable]
 
+        # every read, append and max() below hits its own table, so each
+        # step runs as concurrent Spark jobs
         markers = self._load_markers()
-        cutoffs = {
-            model: markers.get(model)
-            or high_water_mark(spark, self._path(model), "load_timestamp")
-            for model in targets
-        }
-        if cutoffs and all(c is not None for c in cutoffs.values()):
-            cutoff = min(cutoffs.values())
+        unmarked = [model for model in targets if model not in markers]
+        hwms = run_concurrently(spark, [
+            functools.partial(high_water_mark, spark, self._path(model), "load_timestamp")
+            for model in unmarked
+        ])
+        cutoffs = [markers[model] for model in targets if model in markers] + hwms
+        if cutoffs and all(c is not None for c in cutoffs):
+            cutoff = min(cutoffs)
             raw = {name: df.filter(F.col("load_timestamp") > F.lit(cutoff)) for name, df in raw.items()}
 
         ctx = market_registry.run(raw, select=targets)
-        appended: dict[str, int] = {}
-        for model in targets:
-            appended[model] = idempotent_append(
-                spark, ctx[model], self._path(model), VAULT_KEYS[model]
-            )
+        counts = run_concurrently(spark, [
+            functools.partial(idempotent_append, spark, ctx[model], self._path(model), VAULT_KEYS[model])
+            for model in targets
+        ])
+        appended = dict(zip(targets, counts))
 
         # advance every model's marker to the raw frontier this run saw —
         # one max() per raw table (parquet footer stats, near-free)
-        frontier = None
-        for df in raw.values():
-            row = df.agg(F.max("load_timestamp").alias("m")).first()
-            if row["m"] is not None and (frontier is None or row["m"] > frontier):
-                frontier = row["m"]
+        maxima = run_concurrently(spark, [
+            df.agg(F.max("load_timestamp").alias("m")).first for df in raw.values()
+        ])
+        frontier = max((row["m"] for row in maxima if row["m"] is not None), default=None)
         if frontier is not None:
             for model in targets:  # only models this run actually built
                 prev = markers.get(model)

@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 from stock_crypto_data_pipeline_public_spark.flows import BatchFlow
 from stock_crypto_data_pipeline_public_spark.schemas import SCHEMAS
 from stock_crypto_data_pipeline_public_spark.sources.faker import MarketDataFaker
-from stock_crypto_data_pipeline_public_spark.vault_incremental import VaultMaterializer
+from stock_crypto_data_pipeline_public_spark.vault_incremental import VAULT_KEYS, VaultMaterializer
 
 
 @pytest.fixture(scope="module")
@@ -29,6 +29,7 @@ def setup(spark, tmp_path_factory):
 
 def test_first_increment_populates_vault(spark, setup):
     _, vm, first = setup
+    assert list(first) == list(VAULT_KEYS)
     assert all(n > 0 for n in first.values()), first
     hub = spark.read.parquet(f"{vm.vault_dir}/hub_customer")
     assert hub.count() == hub.select("customer_bk").distinct().count()
@@ -106,8 +107,6 @@ def test_markers_cover_empty_models(spark, setup):
     marker is what bounds the next run's raw slice)."""
     import json
 
-    from stock_crypto_data_pipeline_public_spark.vault_incremental import VAULT_KEYS
-
     _, vm, _ = setup
     with open(f"{vm.vault_dir}/_processed_through.json") as f:
         markers = json.load(f)
@@ -121,8 +120,6 @@ def test_empty_feed_model_still_gets_sliced_runs(spark, tmp_path):
     co permanently empty), the SECOND increment must still apply a cutoff
     slice — before the marker fix, `all(hwm is not None)` failed forever and
     every run reprocessed full raw history."""
-    from stock_crypto_data_pipeline_public_spark.vault_incremental import VaultMaterializer
-
     flow = BatchFlow(landing_dir=str(tmp_path / "landing"), warehouse_dir=str(tmp_path / "wh"))
     vm = VaultMaterializer(warehouse_dir=flow.warehouse_dir, vault_dir=str(tmp_path / "vault"))
     raw = MarketDataFaker(seed=77, n_corporates=3, n_customers=10, n_transactions=20,
